@@ -1,27 +1,16 @@
 """Deterministic hashing kernels for dedup/fingerprinting.
 
-Pure numpy/Python, shared between the vectorized Spark operators and their
-pytest oracles (the dual scalar/vectorized pattern from SURVEY.md §7).
+Pure numpy/Python. The seeded hyperplanes feed the Spark embedding-LSH
+operators directly; the scalar kernels (xxhash64, word_shingles, jaccard,
+simhash64, rolling_fingerprint) are the reference implementations the
+pytest suite checks the Spark operators against value for value.
 Everything is seeded/constant: a rerun produces identical signatures, the
 property the driver's rerun-per-round comparison relies on.
 """
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
-
-MERSENNE61 = (1 << 61) - 1
-_SEED = 42
-
-N_PERM = 64  # minhash permutations
-N_BANDS = 16  # LSH bands (x 4 rows/band)
-ROWS_PER_BAND = N_PERM // N_BANDS
-
-_rs = np.random.RandomState(_SEED)
-_A = _rs.randint(1, MERSENNE61, size=N_PERM, dtype=np.int64).astype(np.uint64)
-_B = _rs.randint(0, MERSENNE61, size=N_PERM, dtype=np.int64).astype(np.uint64)
 
 SIMHASH_BITS = 64
 
@@ -94,12 +83,6 @@ def xxhash64(data: bytes, seed: int = 42) -> int:
     return h
 
 
-def stable_hash64(token: str) -> int:
-    """Deterministic 64-bit token hash (blake2b; NOT Python hash(), which is
-    salted per process)."""
-    return int.from_bytes(hashlib.blake2b(token.encode("utf-8"), digest_size=8).digest(), "little")
-
-
 def word_shingles(text: str, k: int = 3) -> list[str]:
     """Word k-shingles, single-space tokenization, exact mirror of the
     native operators/dedup.word_3gram_col construction: short texts pad
@@ -109,35 +92,6 @@ def word_shingles(text: str, k: int = 3) -> list[str]:
     if len(toks) < k:
         return [" ".join((toks + [""] * k)[:k])]
     return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
-
-
-def minhash_signature(text: str, k: int = 3) -> np.ndarray:
-    """N_PERM-wide minhash over word k-shingles (uint64). REFERENCE KERNEL
-    for pytest only — the Spark path (operators/dedup.minhash_bands) is a
-    fully-native expression using xxhash64 and mod 2^31-1, and produces
-    different (equally valid) signatures.
-
-    Note: the a*x multiply below wraps mod 2^64 (numpy uint64) BEFORE the
-    Mersenne-prime reduction — wrap-then-mod, not the textbook universal
-    hash family. Deterministic and self-consistent, which is all the
-    pytest oracle needs."""
-    sh = word_shingles(text, k)
-    # word_shingles always returns >= 1 shingle (short texts pad with
-    # empty-string tokens), so empty text hashes the padded '  ' shingle
-    # rather than taking a sentinel path — no empty-list case exists.
-    hv = np.fromiter((stable_hash64(s) for s in sh), dtype=np.uint64, count=len(sh))
-    prods = (_A[:, None] * (hv[None, :] % MERSENNE61) + _B[:, None]) % MERSENNE61
-    return prods.min(axis=1)
-
-
-def band_keys(sig: np.ndarray) -> list[str]:
-    """LSH banding: N_BANDS keys; equal key in any band → candidate pair."""
-    out = []
-    for b in range(N_BANDS):
-        chunk = sig[b * ROWS_PER_BAND : (b + 1) * ROWS_PER_BAND]
-        h = hashlib.blake2b(chunk.tobytes(), digest_size=8).hexdigest()
-        out.append(f"{b}:{h}")
-    return out
 
 
 def jaccard(text_a: str, text_b: str, k: int = 3) -> float:
@@ -151,9 +105,9 @@ def jaccard(text_a: str, text_b: str, k: int = 3) -> float:
 
 def simhash64(text: str) -> int:
     """64-bit SimHash over single-space tokens (term-frequency weighted),
-    xxhash64-based — the EXACT scalar twin of the native Spark expression
-    in operators/dedup.simhash_signatures (bit i set iff more than half
-    the token hashes have bit i set). Unsigned result."""
+    xxhash64-based — the reference operators/dedup.simhash_signatures
+    must equal bit for bit (bit i set iff more than half the token hashes
+    have bit i set). Unsigned result."""
     toks = [t for t in text.split(" ") if t]
     if not toks:
         return 0
@@ -212,8 +166,3 @@ def hyperplanes(dim: int, n: int = N_HYPERPLANES) -> np.ndarray:
     rs = np.random.RandomState(_HP_SEED)
     return rs.normal(size=(n, dim)).astype(np.float64)
 
-
-def lsh_bucket(vec: np.ndarray, planes: np.ndarray) -> int:
-    """Sign-random-projection bucket id."""
-    signs = (planes @ vec) > 0
-    return int(sum(1 << i for i, s in enumerate(signs) if s))

@@ -12,9 +12,9 @@ training-data layer along the same axis as the batch MinHash operator.
 
 Shape (all stages map-side until the single band shuffle):
 
-  doc stream ─ fused Arrow signature (the SAME minhash_sig_fast_pandas
-  kernel and xxhash64 band keys as batch, so batch and stream agree on
-  the LSH family) ─ explode to (band_key, doc_id, sig) ─ groupBy(band_key)
+  doc stream ─ fused Arrow signature (the SAME minhash_sig_pandas
+  kernel and band_key_array band keys as batch, so batch and stream agree
+  on the LSH family) ─ explode to (band_key, doc_id, sig) ─ groupBy(band_key)
   applyInPandasWithState ─ append (doc_id, rep_id, est_jaccard) matches.
 
 Per band bucket the state holds up to `max_reps` representative
@@ -69,10 +69,9 @@ from pyspark.sql.types import (
 )
 
 from ..operators.dedup import (
-    N_BANDS,
     N_PERM,
-    ROWS_PER_BAND,
-    minhash_sig_fast_pandas,
+    band_key_array,
+    minhash_sig_pandas,
 )
 
 # band_key rides along so "one row per (band, doc, rep)" is assertable —
@@ -132,6 +131,18 @@ def greedy_bucket_matches(
     return out, rep_ids, rep_mat
 
 
+def _sorted_members(pdf: pd.DataFrame) -> tuple[np.ndarray, np.ndarray]:
+    """(doc_ids, sig_mat) of one bucket's rows in doc_id order — the
+    member order greedy_bucket_matches consumes. The streaming operator
+    and the batch twin both call it on the WHOLE bucket of a (micro-)
+    batch, so the greedy rep choice cannot depend on how Spark chunked
+    the group into Arrow batches."""
+    order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
+    doc_ids = pdf["doc_id"].to_numpy()[order]
+    sig_mat = np.stack(pdf["sig"].to_numpy()[order]).astype(np.int64)
+    return doc_ids, sig_mat
+
+
 def make_neardup_op(
     threshold: float = DEFAULT_EST_THRESHOLD,
     max_reps: int = DEFAULT_MAX_REPS,
@@ -156,17 +167,17 @@ def make_neardup_op(
         else:
             rep_ids = np.empty(0, dtype=np.int64)
             rep_mat = np.empty((0, N_PERM), dtype=np.int64)
+        # the group's Arrow chunks are concatenated and sorted ONCE: a
+        # per-chunk sort would let chunk boundaries reorder members and
+        # change the greedy rep choice (the batch twin's memory profile —
+        # one bucket of one micro-batch in memory)
+        chunks = [pdf for pdf in pdfs if len(pdf)]
         matches: list[tuple[int, int, float]] = []
-        for pdf in pdfs:
-            if not len(pdf):
-                continue
-            order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
-            doc_ids = pdf["doc_id"].to_numpy()[order]
-            sig_mat = np.stack(pdf["sig"].to_numpy()[order]).astype(np.int64)
-            out, rep_ids, rep_mat = greedy_bucket_matches(
+        if chunks:
+            doc_ids, sig_mat = _sorted_members(pd.concat(chunks, ignore_index=True))
+            matches, rep_ids, rep_mat = greedy_bucket_matches(
                 doc_ids, sig_mat, rep_ids, rep_mat, threshold, max_reps
             )
-            matches.extend(out)
         state.update(
             ([int(x) for x in rep_ids], [int(x) for x in rep_mat.ravel()])
         )
@@ -183,22 +194,15 @@ def make_neardup_op(
 def sig_band_rows(docs: DataFrame) -> DataFrame:
     """(doc_id, sig, band_key) — one row per (doc, band), batch or stream.
     Identical hash family to the batch operator: the fused signature
-    kernel plus xxhash64(band_index, signature slice) band keys
-    (operators/dedup.py minhash_bands), so a doc lands in the same
-    buckets whichever path processes it."""
+    kernel plus band_key_array (operators/dedup.py minhash_bands), so a
+    doc lands in the same buckets whichever path processes it."""
     sigs = docs.select(
         "doc_id",
-        minhash_sig_fast_pandas()(F.coalesce(F.col("text"), F.lit(""))).alias("sig"),
+        minhash_sig_pandas()(F.coalesce(F.col("text"), F.lit(""))).alias("sig"),
     )
-    band_arr = F.array(
-        *[
-            F.xxhash64(
-                F.lit(b), F.slice(F.col("sig"), b * ROWS_PER_BAND + 1, ROWS_PER_BAND)
-            )
-            for b in range(N_BANDS)
-        ]
+    return sigs.select(
+        "doc_id", "sig", F.explode(band_key_array(F.col("sig"))).alias("band_key")
     )
-    return sigs.select("doc_id", "sig", F.explode(band_arr).alias("band_key"))
 
 
 def neardup_match_stream(
@@ -271,9 +275,7 @@ def batch_neardup_matches(
     for backfills that want streaming-identical semantics."""
 
     def run_bucket(pdf: pd.DataFrame) -> pd.DataFrame:
-        order = np.argsort(pdf["doc_id"].to_numpy(), kind="stable")
-        doc_ids = pdf["doc_id"].to_numpy()[order]
-        sig_mat = np.stack(pdf["sig"].to_numpy()[order]).astype(np.int64)
+        doc_ids, sig_mat = _sorted_members(pdf)
         out, _, _ = greedy_bucket_matches(
             doc_ids,
             sig_mat,

@@ -17,10 +17,15 @@ from bocadillo_spark.operators.dedup import (
 
 
 def test_minhash_kernel_determinism():
+    import numpy as np
+    import pandas as pd
+
+    from bocadillo_spark.operators.dedup import minhash_sig_pandas
+
     t = "the quick brown fox jumps over the lazy dog again and again"
-    s1, s2 = H.minhash_signature(t), H.minhash_signature(t)
-    assert (s1 == s2).all()
-    assert H.band_keys(s1) == H.band_keys(s2)
+    kernel = minhash_sig_pandas().func
+    s1, s2 = kernel(pd.Series([t, "other text"])), kernel(pd.Series([t]))
+    assert np.array_equal(s1[0], s2[0]) and len(s1[0]) == 64
     assert H.simhash64(t) == H.simhash64(t)
     assert H.rolling_fingerprint(t) == H.rolling_fingerprint(t)
     # chunked-Horner path must equal the scalar recurrence
@@ -94,9 +99,9 @@ def test_xxhash64_kernel_matches_spark(spark):
 
 def test_simhash_native_matches_kernel(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(30)
-    sigs = simhash_signatures(docs, vectorized=False)
+    sigs = simhash_signatures(docs)
     plan = sigs._jdf.queryExecution().executedPlan().toString()
-    assert "MapInPandas" not in plan and "ArrowEval" not in plan
+    assert "BatchEvalPython" not in plan and "MapInPandas" not in plan
     got = {r["doc_id"]: r["simhash"] for r in sigs.collect()}
     for r in docs.select("doc_id", "text").collect():
         u = H.simhash64(r["text"] or "")
@@ -104,12 +109,57 @@ def test_simhash_native_matches_kernel(spark, sf_dir):
         assert got[r["doc_id"]] == want, r["doc_id"]
 
 
+def _signed64(u):
+    return u - (1 << 64 if u >= 1 << 63 else 0)
+
+
+def _minhash_band_keys_reference(text):
+    """Per-row pure-Python reference for minhash_bands: the windowing of
+    hashing.word_shingles, each word hashed alone with pd.util.hash_array
+    and mixed per 3-gram in wrapping uint64, (a·h+b) mod p minima with
+    Python ints, and band keys as Spark's xxhash64(band, slice) — the int
+    band index (4 bytes) and then each long (8 bytes), seed-chained from
+    42 — via hashing.xxhash64."""
+    import numpy as np
+    import pandas as pd
+
+    from bocadillo_spark.operators.dedup import (
+        _PERM_A,
+        _PERM_B,
+        N_BANDS,
+        P31,
+        ROWS_PER_BAND,
+    )
+
+    mask, mix = (1 << 64) - 1, 0x9E3779B97F4A7C15
+
+    def word_hash(w):
+        return int(pd.util.hash_array(np.array([w], dtype=object))[0])
+
+    hashes = set()
+    for shingle in H.word_shingles(text or ""):
+        h0, h1, h2 = (word_hash(w) for w in shingle.split(" "))
+        hashes.add((((h0 * mix + h1) & mask) * mix + h2) & mask)
+    sig = [
+        min((int(a) * (h % P31) + int(b)) % P31 for h in hashes)
+        for a, b in zip(_PERM_A, _PERM_B)
+    ]
+    keys = []
+    for b in range(N_BANDS):
+        h = H.xxhash64(b.to_bytes(4, "little"), 42)
+        for v in sig[b * ROWS_PER_BAND:(b + 1) * ROWS_PER_BAND]:
+            h = H.xxhash64(v.to_bytes(8, "little", signed=True), h)
+        keys.append(_signed64(h))
+    return keys
+
+
 def test_vectorized_folds_byte_identical_to_native(spark, sf_dir):
-    """The Arrow-batched MinHash and SimHash folds (the defaults) must
-    emit EXACTLY the native interpreted folds' signatures — both are pure
-    int64 arithmetic, so equality is bitwise, not approximate. Fixture
-    includes empty text (no shingles/tokens: minhash sig all-P31 init,
-    simhash 0) and short texts."""
+    """The Arrow-batched MinHash and SimHash folds must emit EXACTLY the
+    signatures of per-row pure-Python references — both are pure integer
+    arithmetic, so equality is bitwise, not approximate. MinHash is
+    checked through its band keys (minhash_bands), SimHash against
+    hashing.simhash64. Fixture includes empty text (one padded shingle,
+    simhash 0), short texts and NULL text (read as '')."""
     from bocadillo_spark.operators.dedup import minhash_bands
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
@@ -118,16 +168,18 @@ def test_vectorized_folds_byte_identical_to_native(spark, sf_dir):
         "doc_id long, text string",
     )
     docs = docs.select("doc_id", "text").unionByName(extra)
+    rows = docs.collect()
+    assert len(rows) == 204
 
-    bv = minhash_bands(docs, fast=False, vectorized=True)
-    bn = minhash_bands(docs, fast=False, vectorized=False)
-    assert sorted(map(tuple, bv.collect())) == sorted(map(tuple, bn.collect()))
+    got_bands = sorted(map(tuple, minhash_bands(docs).collect()))
+    want_bands = sorted(
+        (r["doc_id"], k) for r in rows for k in _minhash_band_keys_reference(r["text"])
+    )
+    assert got_bands == want_bands
 
-    sv = {r["doc_id"]: r["simhash"]
-          for r in simhash_signatures(docs, vectorized=True).collect()}
-    sn = {r["doc_id"]: r["simhash"]
-          for r in simhash_signatures(docs, vectorized=False).collect()}
-    assert sv == sn and len(sv) == 204
+    got_sim = {r["doc_id"]: r["simhash"] for r in simhash_signatures(docs).collect()}
+    want_sim = {r["doc_id"]: _signed64(H.simhash64(r["text"] or "")) for r in rows}
+    assert got_sim == want_sim
 
 
 def test_fast_shingle_kernel_cardinalities_match_native(spark, sf_dir):
@@ -136,7 +188,8 @@ def test_fast_shingle_kernel_cardinalities_match_native(spark, sf_dir):
     values but must see the SAME shingle set (same tokens-incl-empties
     split, same max(n-2,1) window, same ''-padding); a mismatch means the
     windowing or distinct semantics diverged. Exercises empty text, short
-    texts, duplicate shingles, and multi-space runs."""
+    texts, duplicate shingles, multi-space runs, and NULL text (which
+    both read as '': one padded shingle)."""
     import numpy as np
     from bocadillo_spark.operators.dedup import _distinct_shingles, word_3gram_col
 
@@ -148,7 +201,7 @@ def test_fast_shingle_kernel_cardinalities_match_native(spark, sf_dir):
     native = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "i long, text string"
     ).select(
-        "i", F.size(word_3gram_col(F.coalesce(F.col("text"), F.lit("")))).alias("n")
+        "i", F.size(word_3gram_col(F.col("text"))).alias("n")
     )
     native_counts = [r["n"] for r in native.orderBy("i").collect()]
     assert fast_counts == native_counts

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from bocadillo_spark.functions import hashing as H
 from bocadillo_spark.operators import multimodal
 from bocadillo_spark.operators.similarity import (
+    EMB_MAX_BUCKET,
     brute_force_topk,
     lsh_topk,
     split_query_candidates,
@@ -18,12 +19,15 @@ from bocadillo_spark.synth import build_html, synth_pages
 
 
 def test_brute_force_topk_matches_numpy(spark, sf_dir):
+    """Exact top-k (cos desc, neighbor_id asc) and 9-decimal cosines equal
+    a per-pair numpy reference — also under tiny Arrow batches, where the
+    per-partition partial top-k is accumulated across many batches."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     q, c = split_query_candidates(emb, n_queries=3)
-    got = brute_force_topk(q, c, k=5).collect()
 
     rows = emb.collect()
     vecs = {r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in rows}
+    expect = {}
     for q_id in range(3):
         qv = vecs[q_id]
         sims = sorted(
@@ -34,11 +38,24 @@ def test_brute_force_topk_matches_numpy(spark, sf_dir):
             ),
             key=lambda t: (-t[0], t[1]),
         )[:5]
-        expect = [vid for _, vid in sims]
-        mine = [r["neighbor_id"] for r in sorted(
-            (g for g in got if g["q_id"] == q_id), key=lambda r: (-r["cos"], r["neighbor_id"])
-        )]
-        assert mine == expect, f"q{q_id}: {mine} vs {expect}"
+        expect[q_id] = [(vid, round(cos, 9)) for cos, vid in sims]
+
+    def check():
+        got = brute_force_topk(q, c, k=5).collect()
+        for q_id in range(3):
+            mine = [(r["neighbor_id"], round(r["cos"], 9)) for r in sorted(
+                (g for g in got if g["q_id"] == q_id),
+                key=lambda r: (-r["cos"], r["neighbor_id"]),
+            )]
+            assert mine == expect[q_id], f"q{q_id}: {mine} vs {expect[q_id]}"
+
+    check()
+    old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+    spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "13")
+    try:
+        check()
+    finally:
+        spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
 def test_lsh_topk_consistent_with_brute(spark, sf_dir):
@@ -380,17 +397,36 @@ def test_embedding_lsh_band_sizing_and_cap(spark, sf_dir):
     assert capped <= pairs
 
 
+def _band_keys_expr(e, planes, bits_per_band):
+    """Test-local reference for lsh_band_keys_pandas: the banded sign-LSH
+    keys as ONE native Spark expression — a sequential-sum dot per plane
+    (aggregate over zip_with), band id above bit 32, bit j of band b =
+    sign of plane[b·bits+j]·v."""
+
+    def plane_dot(plane):
+        lit = F.array(*[F.lit(float(v)) for v in plane])
+        return F.aggregate(
+            F.zip_with(e, lit, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
+        )
+
+    keys = []
+    for b in range(len(planes) // bits_per_band):
+        key = F.lit(b << 32).cast("long")
+        for j in range(bits_per_band):
+            key = key + F.when(
+                plane_dot(planes[b * bits_per_band + j]) > 0, F.lit(1 << j).cast("long")
+            ).otherwise(F.lit(0).cast("long"))
+        keys.append(key)
+    return F.array(*keys)
+
+
 def test_lsh_band_keys_pandas_matches_expression(spark, sf_dir):
     """The Arrow-batched matmul projection (lsh_band_keys_pandas, the
-    default inside embedding_bands) emits EXACTLY the band keys of the
-    interpreted higher-order-expression twin on real fixture embeddings —
-    the two paths may only diverge on dots at exactly 0.0, measure-zero
-    for real-valued vectors."""
-    from bocadillo_spark.functions import hashing as H
-    from bocadillo_spark.operators.similarity import (
-        lsh_band_keys_col,
-        lsh_band_keys_pandas,
-    )
+    kernel inside embedding_bands) emits EXACTLY the band keys of the
+    test-local native-expression reference on real fixture embeddings —
+    the two may only diverge on dots at exactly 0.0, measure-zero for
+    real-valued vectors."""
+    from bocadillo_spark.operators.similarity import lsh_band_keys_pandas
 
     bits = 5
     planes = H.hyperplanes(64, n=16 * bits)
@@ -399,22 +435,49 @@ def test_lsh_band_keys_pandas_matches_expression(spark, sf_dir):
     )
     both = emb.select(
         "vec_id",
-        lsh_band_keys_col(F.col("e"), planes, bits).alias("expr_keys"),
+        _band_keys_expr(F.col("e"), planes, bits).alias("expr_keys"),
         lsh_band_keys_pandas(planes, bits)(F.col("e")).alias("pd_keys"),
     )
     assert both.where(F.col("expr_keys") != F.col("pd_keys")).count() == 0
     assert both.count() > 0
 
 
+def _near_dup_pairs_reference(vecs, bits_per_band, threshold=0.99, max_bucket=EMB_MAX_BUCKET):
+    """numpy reference for embedding_near_dup_pairs: sign-pack each
+    vector's 16 band keys over H.hyperplanes, drop buckets larger than
+    max_bucket, then every in-bucket pair at cos ≥ threshold (min id
+    first) with its cosine to 6 decimals."""
+    from itertools import combinations
+
+    planes = H.hyperplanes(64, n=16 * bits_per_band)
+    ids = sorted(vecs)
+    signs = np.stack([vecs[i] for i in ids]) @ planes.T > 0
+    buckets = {}
+    for row, vid in enumerate(ids):
+        for b in range(16):
+            bits = tuple(signs[row, b * bits_per_band:(b + 1) * bits_per_band])
+            buckets.setdefault((b, bits), []).append(vid)
+    out = set()
+    for members in buckets.values():
+        if len(members) > max_bucket:
+            continue
+        for a, b in combinations(members, 2):
+            va, vb = vecs[a], vecs[b]
+            cos = float(va @ vb / (np.linalg.norm(va) * np.linalg.norm(vb)))
+            if cos >= threshold:
+                out.add((a, b, round(cos, 6)))
+    return out
+
+
 def test_bucket_scan_matches_joined_verify(spark, sf_dir):
-    """The bucket-scan plan (default embedding_near_dup_pairs) returns
-    the same pair set and 6-decimal cosines as the join-based twin —
-    including under a tiny max_bucket (cap enforced mid-stream) and a
-    tiny Arrow batch size (buckets forced to span batch boundaries, the
-    carry path)."""
+    """The bucket-scan plan (embedding_near_dup_pairs) returns the same
+    pair set and 6-decimal cosines as a numpy join-every-bucket-then-verify
+    reference — including under a tiny max_bucket (cap enforced
+    mid-stream) and a tiny Arrow batch size (buckets forced to span batch
+    boundaries, the carry path)."""
     from bocadillo_spark.operators.similarity import (
         embedding_near_dup_pairs,
-        embedding_near_dup_pairs_joined,
+        sized_bits_per_band,
     )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
@@ -425,6 +488,12 @@ def test_bucket_scan_matches_joined_verify(spark, sf_dir):
         F.transform("e", lambda x: x * F.lit(1.01) + F.lit(0.001)).alias("e"),
     )
     aug = emb.unionByName(variants)
+    vecs = {
+        r["vec_id"]: np.array(r["e"], dtype=np.float64) for r in aug.collect()
+    }
+    bits = sized_bits_per_band(len(vecs))
+    want = _near_dup_pairs_reference(vecs, bits)
+    assert want
 
     def pairset(df):
         return {
@@ -432,54 +501,65 @@ def test_bucket_scan_matches_joined_verify(spark, sf_dir):
             for r in df.collect()
         }
 
-    assert pairset(embedding_near_dup_pairs(aug)) == pairset(
-        embedding_near_dup_pairs_joined(aug)
-    )
-    # capped: both paths drop the same buckets
-    assert pairset(embedding_near_dup_pairs(aug, max_bucket=3)) == pairset(
-        embedding_near_dup_pairs_joined(aug, max_bucket=3)
-    )
+    assert pairset(embedding_near_dup_pairs(aug)) == want
+    # capped: the same buckets are dropped
+    want_capped = _near_dup_pairs_reference(vecs, bits, max_bucket=3)
+    assert want_capped <= want
+    assert pairset(embedding_near_dup_pairs(aug, max_bucket=3)) == want_capped
     # tiny Arrow batches exercise the cross-batch bucket carry
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        assert pairset(embedding_near_dup_pairs(aug)) == pairset(
-            embedding_near_dup_pairs_joined(aug)
-        )
+        assert pairset(embedding_near_dup_pairs(aug)) == want
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
 def test_brute_force_vectorized_equals_crossjoin_twin(spark, sf_dir):
-    """The mapInPandas partial-top-k brute force (the default) must return
-    the same (q_id, neighbor_id) rows and round-9 cosines as the
-    crossJoin + interpreted-fold twin, including under tiny Arrow batches
-    (partial top-k accumulated across many batches)."""
+    """The mapInPandas partial-top-k brute force must return exactly the
+    (q_id, neighbor_id) rows and round-9 cosines of a crossJoin-shaped
+    numpy reference (score every query x candidate pair, keep the k best
+    per query by cos desc, neighbor_id asc) — no missing, extra or
+    duplicated rows — including under tiny Arrow batches (partial top-k
+    accumulated across many batches)."""
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    q, c = split_query_candidates(emb, n_queries=4)
+    n_q, k = 4, 7
+    q, c = split_query_candidates(emb, n_queries=n_q)
+
+    vecs = {
+        r["vec_id"]: np.array(r["embedding"], dtype=np.float64) for r in emb.collect()
+    }
+    q_ids = [vid for vid in vecs if vid < n_q]
+    c_ids = np.array(sorted(vid for vid in vecs if vid >= n_q))
+    Q = np.stack([vecs[i] for i in q_ids])
+    C = np.stack([vecs[i] for i in c_ids])
+    cos = (Q @ C.T) / np.outer(np.linalg.norm(Q, axis=1), np.linalg.norm(C, axis=1))
+    want = sorted(
+        (q_id, int(c_ids[j]), round(float(cos[i, j]), 9))
+        for i, q_id in enumerate(q_ids)
+        for j in np.lexsort((c_ids, -cos[i]))[:k]
+    )
+    assert len(want) == n_q * k
 
     def rows(df):
         return sorted(
             (r["q_id"], r["neighbor_id"], round(r["cos"], 9)) for r in df.collect()
         )
 
-    assert rows(brute_force_topk(q, c, k=7, vectorized=True)) == rows(
-        brute_force_topk(q, c, k=7, vectorized=False)
-    )
+    assert rows(brute_force_topk(q, c, k=k)) == want
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "13")
     try:
-        assert rows(brute_force_topk(q, c, k=7, vectorized=True)) == rows(
-            brute_force_topk(q, c, k=7, vectorized=False)
-        )
+        assert rows(brute_force_topk(q, c, k=k)) == want
     finally:
         spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", old)
 
 
-def test_ivf_assign_vectorized_equals_minby_twin(spark, sf_dir):
-    """The batched-argmin IVF assignment (the default) must agree with the
-    crossJoin + min_by twin on every vector (kmeans centroids: no exact
-    distance ties, so both argmins are unambiguous)."""
+def test_ivf_assign_matches_numpy_argmin(spark, sf_dir):
+    """The batched-argmin IVF assignment must equal a numpy argmin of the
+    squared distance with the lowest-centroid_id tie rule, on every vector
+    (kmeans centroids) — and on planted exact ties (a centroid duplicated
+    under a higher id never wins)."""
     from bocadillo_spark.operators.similarity import (
         _as_double,
         ivf_assign,
@@ -489,13 +569,26 @@ def test_ivf_assign_vectorized_equals_minby_twin(spark, sf_dir):
     e = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", _as_double(F.col("embedding")).alias("e")
     )
-    cents = kmeans_centroids(e, n_clusters=12)
-    assert cents is not None
-    av = {r["vec_id"]: r["list_id"]
-          for r in ivf_assign(e, cents, vectorized=True).collect()}
-    an = {r["vec_id"]: r["list_id"]
-          for r in ivf_assign(e, cents, vectorized=False).collect()}
-    assert av == an and len(av) > 0
+    kmeans = kmeans_centroids(e, n_clusters=12)
+    assert kmeans is not None
+    rows = e.collect()
+    crows = [(r["centroid_id"], list(r["ce"])) for r in kmeans.collect()]
+    # exact tie: centroid 100 duplicates the centroid nearest vector 0, so
+    # vector 0 (and all of that centroid's list) must keep the lower id
+    v0 = np.array(rows[0]["e"], dtype=np.float64)
+    tied = min(crows, key=lambda c: (((np.array(c[1]) - v0) ** 2).sum(), c[0]))
+    crows.append((100, tied[1]))
+    cents = spark.createDataFrame(crows, "centroid_id long, ce array<double>")
+    c_ids = np.array([c for c, _ in crows])
+    C = np.array([ce for _, ce in crows], dtype=np.float64)
+
+    got = {r["vec_id"]: r["list_id"] for r in ivf_assign(e, cents).collect()}
+    assert len(got) == len(rows) > 0
+    for r in rows:
+        d = ((C - np.array(r["e"], dtype=np.float64)) ** 2).sum(axis=1)
+        want = c_ids[np.flatnonzero(d == d.min())].min()
+        assert got[r["vec_id"]] == want, r["vec_id"]
+    assert got[rows[0]["vec_id"]] == tied[0] and 100 not in set(got.values())
 
 
 # ---------------------------------------------------------------------------

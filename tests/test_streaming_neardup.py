@@ -7,6 +7,7 @@ from __future__ import annotations
 import tempfile
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from bocadillo_spark.operators.dedup import (
@@ -18,6 +19,7 @@ from bocadillo_spark.operators.dedup import (
 from bocadillo_spark.streaming.neardup import (
     batch_neardup_matches,
     greedy_bucket_matches,
+    make_neardup_op,
     pair_verdicts,
     run_neardup_stream,
 )
@@ -62,6 +64,35 @@ def test_greedy_core_bucket_cap_bounds_state():
     # matched nor promoted — state stays ≤ max_reps signatures
     assert out == []
     assert rep_ids.tolist() == [0, 1] and rep_mat.shape == (2, 64)
+
+
+def test_stream_op_rep_choice_ignores_arrow_chunking():
+    """A bucket whose micro-batch rows arrive as two out-of-order Arrow
+    chunks (doc 5, then doc 3, same signature) must resolve exactly as one
+    doc_id-ordered pass — the batch twin's order: doc 3 becomes the rep
+    and doc 5 matches it. Sorting each chunk separately made doc 5 the
+    rep instead."""
+
+    class StubState:
+        hasTimedOut = False
+        exists = False
+
+        def update(self, value):
+            self.value = value
+
+    sig = np.arange(64, dtype=np.int64)
+    chunks = [
+        pd.DataFrame({"doc_id": [5], "sig": [sig]}),
+        pd.DataFrame({"doc_id": [3], "sig": [sig]}),
+    ]
+    state = StubState()
+    out = pd.concat(list(make_neardup_op()((77,), iter(chunks), state)))
+    got = [tuple(r) for r in out.itertuples(index=False)]
+    want, _, _ = greedy_bucket_matches(
+        np.array([3, 5], dtype=np.int64), np.stack([sig, sig]), *_empty_state(), 0.6, 50
+    )
+    assert got == [(77, 5, 3, 1.0)] == [(77, *m) for m in want]
+    assert state.value[0] == [3]
 
 
 def _write_sorted_two_files(spark, docs, path):
